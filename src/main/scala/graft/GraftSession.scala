@@ -32,11 +32,9 @@ object GraftSession {
       // slower (q302 2.79→6.57 s, q316 5.00→7.59, q243 5.12→6.72,
       // q360 10.8→12.7; only q321/q317 improved) — collapsing few-MB
       // shuffles to one 64 MB-target partition serializes real compute
-      // work at this SF. Env-parameterised so a cluster deployment can
-      // flip it where reducers genuinely drown in small tasks:
-      // GRAFT_AQE_PARALLELISM_FIRST=false.
+      // work at this SF.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "true"))
+        "true")
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.sql.parquet.aggregatePushdown", "true")
       // ContextCleaner only reclaims shuffle/broadcast files when the

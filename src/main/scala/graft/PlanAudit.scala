@@ -12,6 +12,11 @@ import org.apache.spark.sql.SparkSession
   * dev report, and [[PlanAudit.audit]] inside PlanAuditSpec so a plan
   * regression (an operator silently degrading to NLJ) fails `sbt test`,
   * not just a manual check.
+  *
+  * Each report line also carries the query's parquet-scan and
+  * cached-scan leaf counts — the cheap detector for the
+  * multi-consumer-without-persist anti-pattern (a subtree referenced
+  * from k plan branches scans its sources k times unless persisted).
   */
 object PlanAudit {
 
@@ -426,7 +431,8 @@ object PlanAudit {
 
   final case class Audit(name: String, shuffles: Int,
       joins: Seq[(String, Int)], flagged: Boolean, error: Option[String],
-      roundedDoubles: Seq[String] = Nil)
+      roundedDoubles: Seq[String] = Nil, parquetScans: Int = -1,
+      inMemScans: Int = -1)
 
   /** Output columns of `df` that are DoubleType and transitively
     * produced by a `round()`/`bround()` — the round-11 hash-red
@@ -513,8 +519,12 @@ object PlanAudit {
             roundedDoubleOutputs(df)
           else Nil
         val exec = df.queryExecution.executedPlan
-        val plan = (exec +: cachedPlans(exec)).map(_.toString).mkString("\n")
+        val top = exec.toString
+        val plan = (top +: cachedPlans(exec).map(_.toString)).mkString("\n")
         def count(s: String) = s.r.findAllIn(plan).size
+        // scan leaves of the top plan only: a cached relation is one
+        // InMemoryTableScan leaf however many scans built it
+        def leaves(s: String) = s.r.findAllIn(top).size
         val joins = Seq(
           "BroadcastHashJoin" -> count("BroadcastHashJoin"),
           "SortMergeJoin" -> count("SortMergeJoin"),
@@ -528,7 +538,7 @@ object PlanAudit {
           (count("BroadcastNestedLoopJoin") + count("CartesianProduct")) > 0 &&
             !intentionalNlj.contains(name)
         Audit(name, shuffles, joins, badNlj || rounded.nonEmpty, None,
-          rounded)
+          rounded, leaves("Scan parquet"), leaves("InMemoryTableScan"))
       } catch {
         case e: Throwable =>
           val msg = Option(e.getMessage).filter(_.nonEmpty)
@@ -556,7 +566,9 @@ object PlanAudit {
           s"  <-- ROUNDED-DOUBLE ORACLED OUTPUT: ${a.roundedDoubles.mkString(",")}"
         else if (a.flagged) "  <-- UNEXPECTED NLJ"
         else ""
-      println(f"[audit] ${a.name}%-24s shuffles=${a.shuffles}%-2d joins=[$joinStr]$flag")
+      println(f"[audit] ${a.name}%-24s shuffles=${a.shuffles}%-2d " +
+        f"parquetScans=${a.parquetScans}%-3d inMemScans=${a.inMemScans}%-3d " +
+        s"joins=[$joinStr]$flag")
     }
     println(s"[audit] flagged=${results.count(_.flagged)}")
     spark.stop()

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * re-encoding — the property that joins the multimodal decode tier to
   * the hash-based dedup tier: phash(resize(img)) is within a few bits
   * of phash(img), so the SimHash-style 16-bit-chunk pigeonhole bucketing
-  * ([[graft.operators.Dedup.simHashCandidates]]) finds re-encoded /
+  * ([[graft.operators.Multimodal.imageNearDups]]) finds re-encoded /
   * resized copies without any pairwise pixel comparison.
   *
   * Why native: the hash is a pure per-row function of the payload bytes

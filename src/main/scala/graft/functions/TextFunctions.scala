@@ -39,14 +39,6 @@ object TextFunctions {
 
   def bpeTokenCount(text: Column): Column = size(bpeTokens(text))
 
-  /** Sum of token lengths (for mean-word-length style quality features). */
-  def sumTokenLen(text: Column): Column = sumTokenLenT(tokens(text))
-
-  /** How many tokens appear in `words` (NOT deduplicated — each
-    * occurrence counts, matching a stopword-ratio definition). */
-  def wordHits(text: Column, words: Seq[String]): Column =
-    wordHitsT(tokens(text), words)
-
   // `*T` variants take an already-computed token array. Callers that
   // derive several features from one document should stage the tokens
   // with withColumn and use these: every lambda referencing tokens(text)

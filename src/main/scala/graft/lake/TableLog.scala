@@ -1,7 +1,7 @@
 package graft.lake
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 /** Minimal versioned table log — the transactional core of a table
@@ -73,9 +73,6 @@ object TableLog {
     require(runId.nonEmpty, "empty run id")
     activeRunId.withValue(Some(runId))(body)
   }
-
-  /** The run id in scope (exposed so orchestrators can report it). */
-  def currentRunId: Option[String] = activeRunId.value
 
   /** Lineage edge recorded ON the commit that consumed the input — the
     * OpenLineage dataset-version analog (the reference wires an
@@ -329,9 +326,6 @@ object TableLog {
     }
   }
 
-  /** Metadata-only row count from manifest stats — `SELECT count(*)`
-    * without opening a single data file. `None` when the snapshot
-    * predates stats collection (then count the ordinary way). */
   /** Rows carried by `commit`'s dirs that are NOT in `prevDirs`,
     * resolved from manifest file stats alone — lets a foreachBatch
     * sink report "rows appended this commit" without re-evaluating
@@ -345,6 +339,9 @@ object TableLog {
     if (counted.isEmpty) None else Some(counted.map(_.rows).sum)
   }
 
+  /** Metadata-only row count from manifest stats — `SELECT count(*)`
+    * without opening a single data file. `None` when the snapshot
+    * predates stats collection (then count the ordinary way). */
   def countRows(spark: SparkSession, path: String,
       version: Option[Int] = None): Option[Long] = {
     val commit = resolve(spark, path, version)
@@ -354,13 +351,6 @@ object TableLog {
     else Some(commit.stats.map(_.rows).sum)
   }
 
-  /** Data-skipping scan: `read(...).filter(col BETWEEN lo AND hi)`, but
-    * files whose manifest [min, max] bounds exclude the interval are
-    * never OPENED — at 100 TB with range-clustered layout (ingestion
-    * time, [[commitOptimize]] Z-order) this is the difference between
-    * scanning a day and scanning the table. The residual filter is
-    * still applied, so results are exact regardless of stats quality;
-    * snapshots without stats degrade to an ordinary filtered scan. */
   /** Dirs of this snapshot with NO stats coverage at all (carried
     * forward from a pre-stats manifest). A pruned read must always
     * keep them: they have no bounds to prune on, and keying the scan
@@ -374,26 +364,67 @@ object TableLog {
       .map(d => s"$path/$d")
   }
 
+  /** Per-file admission test of a pruned-read probe, built once per
+    * resolved snapshot (sidecar probes load that snapshot's indexes). */
+  private type FileFilter = Commit => TableStats.FileStats => Boolean
+
+  private def rangeFilter(colName: String, lo: Any, hi: Any): FileFilter =
+    _ => TableStats.mightMatch(_, colName, lo, hi)
+
+  private def inFilter(colName: String, values: Seq[Any]): FileFilter =
+    _ => f => values.exists(v => TableStats.mightMatch(f, colName, v, v))
+
+  private def eqFilter(spark: SparkSession, path: String, colName: String,
+      value: Any): FileFilter = { commit =>
+    val blooms = BloomIndex.loadAll(spark, path, commit)
+    f => TableStats.mightMatch(f, colName, value, value) &&
+      BloomIndex.fileMightContain(blooms, f.file, colName, value)
+  }
+
+  private def containsFilter(spark: SparkSession, path: String,
+      colName: String, needle: String): FileFilter = { commit =>
+    val tris = TextIndex.loadAll(spark, path, commit)
+    f => TextIndex.fileMightContainNeedle(tris, f.file, colName, needle)
+  }
+
+  /** Open only the files `admits` keeps plus the untracked dirs, then
+    * apply `residual` so results are exact regardless of index quality.
+    * A stats-less snapshot (or `fullScan`) degrades to a filtered scan.
+    * [[readDirsAligned]] keeps read()'s union-schema contract when the
+    * kept files span a schema evolution. */
+  private def prunedRead(spark: SparkSession, path: String,
+      version: Option[Int], residual: Column,
+      admits: FileFilter, fullScan: Boolean = false): DataFrame = {
+    val commit = resolve(spark, path, version)
+    require(commit.dirs.nonEmpty, s"version ${commit.version} is an empty snapshot")
+    def all = readDirs(spark, commit, commit.dirs.map(d => s"$path/$d"))
+    if (commit.stats.isEmpty || fullScan) return all.where(residual)
+    val keep = admits(commit)
+    val kept = commit.stats.filter(keep).map(f => s"$path/${f.file}") ++
+      untrackedDirPaths(commit, path)
+    if (kept.isEmpty) all.where(org.apache.spark.sql.functions.lit(false))
+    else readDirsAligned(spark, commit, path, kept).where(residual)
+  }
+
+  /** (files kept, files total) among the stats-tracked files. */
+  private def pruneCount(spark: SparkSession, path: String,
+      version: Option[Int], admits: FileFilter): (Int, Int) = {
+    val commit = resolve(spark, path, version)
+    (commit.stats.count(admits(commit)), commit.stats.size)
+  }
+
+  /** Data-skipping scan: `read(...).filter(col BETWEEN lo AND hi)`, but
+    * files whose manifest [min, max] bounds exclude the interval are
+    * never OPENED — at 100 TB with range-clustered layout (ingestion
+    * time, [[commitOptimize]] Z-order) this is the difference between
+    * scanning a day and scanning the table. The residual filter is
+    * still applied, so results are exact regardless of stats quality;
+    * snapshots without stats degrade to an ordinary filtered scan. */
   def readWhere(spark: SparkSession, path: String, colName: String,
       lo: Any, hi: Any, version: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val commit = resolve(spark, path, version)
-    require(commit.dirs.nonEmpty, s"version ${commit.version} is an empty snapshot")
-    val residual = col(colName).between(lit(lo), lit(hi))
-    if (commit.stats.isEmpty)
-      return read(spark, path, version).where(residual)
-    val kept = commit.stats
-      .filter(TableStats.mightMatch(_, colName, lo, hi))
-      .map(f => s"$path/${f.file}") ++ untrackedDirPaths(commit, path)
-    if (kept.isEmpty) read(spark, path, version).where(lit(false))
-    else {
-      // same union-schema contract as read(): the kept files may span a
-      // schema evolution, and a column present only in PRUNED files must
-      // still appear (null-backfilled) or readWhere != read().filter().
-      // With a recorded snapshot schema the parquet reader does the
-      // null-backfill itself; only pre-schema manifests pay footer-merge.
-      readDirsAligned(spark, commit, path, kept).where(residual)
-    }
+    prunedRead(spark, path, version, col(colName).between(lit(lo), lit(hi)),
+      rangeFilter(colName, lo, hi))
   }
 
   /** Set-valued data skipping: `read(...).filter(col IN values)`, but a
@@ -404,18 +435,10 @@ object TableLog {
     * exactness as [[readWhere]]. */
   def readWhereIn(spark: SparkSession, path: String, colName: String,
       values: Seq[Any], version: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
     require(values.nonEmpty, "readWhereIn needs at least one value")
-    val commit = resolve(spark, path, version)
-    require(commit.dirs.nonEmpty, s"version ${commit.version} is an empty snapshot")
-    val residual = col(colName).isin(values: _*)
-    if (commit.stats.isEmpty)
-      return read(spark, path, version).where(residual)
-    val kept = commit.stats
-      .filter(f => values.exists(v => TableStats.mightMatch(f, colName, v, v)))
-      .map(f => s"$path/${f.file}") ++ untrackedDirPaths(commit, path)
-    if (kept.isEmpty) read(spark, path, version).where(lit(false))
-    else readDirsAligned(spark, commit, path, kept).where(residual)
+    prunedRead(spark, path, version,
+      org.apache.spark.sql.functions.col(colName).isin(values: _*),
+      inFilter(colName, values))
   }
 
   /** Point-lookup scan with two pruning tiers: a file is OPENED only
@@ -431,18 +454,8 @@ object TableLog {
       value: Any, version: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     require(value != null, "equality probe value must be non-null")
-    val commit = resolve(spark, path, version)
-    require(commit.dirs.nonEmpty, s"version ${commit.version} is an empty snapshot")
-    val residual = col(colName) === lit(value)
-    if (commit.stats.isEmpty)
-      return read(spark, path, version).where(residual)
-    val blooms = BloomIndex.loadAll(spark, path, commit)
-    val kept = commit.stats
-      .filter(f => TableStats.mightMatch(f, colName, value, value) &&
-        BloomIndex.fileMightContain(blooms, f.file, colName, value))
-      .map(f => s"$path/${f.file}") ++ untrackedDirPaths(commit, path)
-    if (kept.isEmpty) read(spark, path, version).where(lit(false))
-    else readDirsAligned(spark, commit, path, kept).where(residual)
+    prunedRead(spark, path, version, col(colName) === lit(value),
+      eqFilter(spark, path, colName, value))
   }
 
   /** Substring-search scan (`LIKE '%needle%'`) with trigram-bloom file
@@ -455,32 +468,20 @@ object TableLog {
     * regardless. */
   def readWhereContains(spark: SparkSession, path: String, colName: String,
       needle: String, version: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
     require(needle != null && needle.nonEmpty, "needle must be non-empty")
-    val commit = resolve(spark, path, version)
-    require(commit.dirs.nonEmpty, s"version ${commit.version} is an empty snapshot")
-    val residual = col(colName).contains(needle)
-    if (commit.stats.isEmpty || needle.length < TextIndex.MinNeedleLength)
-      return read(spark, path, version).where(residual)
-    val tris = TextIndex.loadAll(spark, path, commit)
-    val kept = commit.stats
-      .filter(f => TextIndex.fileMightContainNeedle(tris, f.file, colName, needle))
-      .map(f => s"$path/${f.file}") ++ untrackedDirPaths(commit, path)
-    if (kept.isEmpty) read(spark, path, version).where(lit(false))
-    else readDirsAligned(spark, commit, path, kept).where(residual)
+    prunedRead(spark, path, version,
+      org.apache.spark.sql.functions.col(colName).contains(needle),
+      containsFilter(spark, path, colName, needle),
+      fullScan = needle.length < TextIndex.MinNeedleLength)
   }
 
   /** (files kept, files total) a [[readWhereContains]] probe would
     * open — the observability hook the trigram-pruning spec asserts. */
   def pruneReportContains(spark: SparkSession, path: String,
       colName: String, needle: String,
-      version: Option[Int] = None): (Int, Int) = {
-    val commit = resolve(spark, path, version)
-    val tris = TextIndex.loadAll(spark, path, commit)
-    (commit.stats.count(f =>
-      TextIndex.fileMightContainNeedle(tris, f.file, colName, needle)),
-      commit.stats.size)
-  }
+      version: Option[Int] = None): (Int, Int) =
+    pruneCount(spark, path, version,
+      containsFilter(spark, path, colName, needle))
 
   /** (files kept by min/max only, files kept by min/max + bloom,
     * files total) that a [[readWhereEq]] probe would consider — the
@@ -488,32 +489,21 @@ object TableLog {
   def pruneReportEq(spark: SparkSession, path: String, colName: String,
       value: Any, version: Option[Int] = None): (Int, Int, Int) = {
     val commit = resolve(spark, path, version)
-    val ranged = commit.stats
-      .filter(TableStats.mightMatch(_, colName, value, value))
-    val blooms = BloomIndex.loadAll(spark, path, commit)
-    (ranged.size,
-      ranged.count(f =>
-        BloomIndex.fileMightContain(blooms, f.file, colName, value)),
+    (commit.stats.count(rangeFilter(colName, value, value)(commit)),
+      commit.stats.count(eqFilter(spark, path, colName, value)(commit)),
       commit.stats.size)
   }
 
   /** (files kept, files total) that [[readWhereIn]] would open. */
   def pruneReportIn(spark: SparkSession, path: String, colName: String,
-      values: Seq[Any], version: Option[Int] = None): (Int, Int) = {
-    val commit = resolve(spark, path, version)
-    (commit.stats.count(f =>
-      values.exists(v => TableStats.mightMatch(f, colName, v, v))),
-      commit.stats.size)
-  }
+      values: Seq[Any], version: Option[Int] = None): (Int, Int) =
+    pruneCount(spark, path, version, inFilter(colName, values))
 
   /** (files kept, files total) that [[readWhere]] would open — the
     * observability hook the pruning spec asserts on. */
   def pruneReport(spark: SparkSession, path: String, colName: String,
-      lo: Any, hi: Any, version: Option[Int] = None): (Int, Int) = {
-    val commit = resolve(spark, path, version)
-    val total = commit.stats.size
-    (commit.stats.count(TableStats.mightMatch(_, colName, lo, hi)), total)
-  }
+      lo: Any, hi: Any, version: Option[Int] = None): (Int, Int) =
+    pruneCount(spark, path, version, rangeFilter(colName, lo, hi))
 
   /** Optimize-write: right-size the output file count from the
     * optimizer's size estimate BEFORE writing — no extra Spark job, no
@@ -761,26 +751,15 @@ object TableLog {
   def addConstraint(spark: SparkSession, path: String, name: String,
       checkExpr: String): Commit = {
     require(name.nonEmpty && !name.contains("\t"), s"bad constraint name '$name'")
-    var attempts = 0
-    while (attempts < MaxCommitAttempts) {
-      val last = resolve(spark, path, None)
+    commitConstraints(spark, path) { last =>
       require(!last.constraints.exists(_.name == name),
         s"constraint '$name' already exists")
       val bad = violations(read(spark, path), Seq(Constraint(name, checkExpr)))
       if (bad.nonEmpty)
         throw new ConstraintViolationException(bad,
           s"existing data at $path (constraint not added)")
-      val v = last.version + 1
-      val cons = last.constraints :+ Constraint(name, checkExpr)
-      val ts = monotonicNow(Some(last))
-      if (writeManifest(spark, path, v, "constraint", last.dirs, last.stats,
-          last.schemaJson, cons, ts))
-        return Commit(v, "constraint", last.dirs, last.stats,
-          last.schemaJson, cons, Some(ts), runId = activeRunId.value)
-      attempts += 1
+      last.constraints :+ Constraint(name, checkExpr)
     }
-    throw new IllegalStateException(
-      s"lost the constraint race $MaxCommitAttempts times at $path")
   }
 
   /** `NOT NULL` as the standard CHECK form. */
@@ -789,14 +768,24 @@ object TableLog {
 
   /** Remove a constraint by name (metadata-only commit). */
   def dropConstraint(spark: SparkSession, path: String,
-      name: String): Commit = {
+      name: String): Commit =
+    commitConstraints(spark, path) { last =>
+      require(last.constraints.exists(_.name == name),
+        s"no constraint named '$name'")
+      last.constraints.filterNot(_.name == name)
+    }
+
+  /** Metadata-only commit of the constraint set `update` derives from
+    * the latest snapshot, carrying its data/stats/schema forward
+    * verbatim; `update` re-runs against the new latest snapshot when
+    * the manifest race is lost. */
+  private def commitConstraints(spark: SparkSession, path: String)(
+      update: Commit => Seq[Constraint]): Commit = {
     var attempts = 0
     while (attempts < MaxCommitAttempts) {
       val last = resolve(spark, path, None)
-      require(last.constraints.exists(_.name == name),
-        s"no constraint named '$name'")
+      val cons = update(last)
       val v = last.version + 1
-      val cons = last.constraints.filterNot(_.name == name)
       val ts = monotonicNow(Some(last))
       if (writeManifest(spark, path, v, "constraint", last.dirs, last.stats,
           last.schemaJson, cons, ts))

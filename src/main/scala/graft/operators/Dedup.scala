@@ -103,7 +103,7 @@ object Dedup {
     //    job race the cold cache and each compute the signatures
     //    themselves. The cache lives until the caller drops it
     //    (`spark.catalog.clearCache()` between unrelated jobs, as Bench
-    //    and ScaleProbe do) — it cannot be unpersisted here because the
+    //    and QueryProbe do) — it cannot be unpersisted here because the
     //    returned plan still references it lazily.
     val signed = spillTo match {
       case Some(path) =>
@@ -275,38 +275,4 @@ object Dedup {
       .select(col(idCol),
         graft.functions.SimHash64.simhash64(tokens(col(textCol))).as("simhash"))
       .orderBy(idCol)
-
-  /** SimHash near-dup candidates: bucket by 16-bit fingerprint chunks
-    * (documents within Hamming distance 3 of each other share at least
-    * one of 4 chunks, pigeonhole) then verify Hamming ≤ `maxHamming`.
-    * Chunk buckets past `maxBucket` are dropped like the MinHash band
-    * buckets (file header contract): a 16-bit chunk value shared by m
-    * boilerplate docs would otherwise put O(m²) rows on one join key. */
-  def simHashCandidates(docs: DataFrame, maxHamming: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text",
-      maxBucket: Int = 200): DataFrame = {
-    val fp = simHash(docs, idCol, textCol)
-    val chunked0 = fp.select(col(idCol), col("simhash"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk_id"),
-          shiftright(col("simhash"), c * 16).bitwiseAND(lit(0xFFFFL)).as("chunk"))
-      }: _*)).as("c"))
-      .select(col(idCol), col("simhash"), col("c.chunk_id"), col("c.chunk"))
-    val bucketSizes = chunked0.groupBy("chunk_id", "chunk")
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n").between(2, maxBucket))
-    val chunked = chunked0.join(bucketSizes.select("chunk_id", "chunk"),
-      Seq("chunk_id", "chunk"), "left_semi")
-    val a = chunked.select(col("chunk_id"), col("chunk"),
-      col(idCol).as("id_a"), col("simhash").as("fp_a"))
-    val b = chunked.select(col("chunk_id"), col("chunk"),
-      col(idCol).as("id_b"), col("simhash").as("fp_b"))
-    a.join(b, Seq("chunk_id", "chunk"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("hamming", bit_count(col("fp_a").bitwiseXOR(col("fp_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-      .distinct()
-      .orderBy("id_a", "id_b")
-  }
 }

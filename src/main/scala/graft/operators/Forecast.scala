@@ -928,7 +928,6 @@ object Forecast {
     val a = alpha; val na = 1 - alpha
     val be = beta; val nb = 1 - beta
     val g = gamma; val ng = 1 - gamma
-    val sCols = (1 to 7).map(j => s"s$j").mkString(", ")
     val sUpd = (1 to 7).map(j =>
       s"CASE WHEN z.dw = $j THEN $g * (z.y - z.ln) + $ng * z.s$j " +
         s"ELSE z.s$j END").mkString(",\n       |    ")

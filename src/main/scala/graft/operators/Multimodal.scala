@@ -536,8 +536,8 @@ object Multimodal {
 
   /** Cross-modal dedup closure: visually-near-duplicate image pairs
     * (resized or byte-level re-encoded copies of the same content) via
-    * perceptual hash → the SAME 16-bit-chunk pigeonhole bucketing as
-    * text SimHash ([[Dedup.simHashCandidates]]'s shape): any pair
+    * perceptual hash → 16-bit-chunk pigeonhole bucketing, the classic
+    * 64-bit SimHash candidate scheme: any pair
     * within Hamming `maxHamming` ≤ 3 shares one of 4 chunks, so the
     * only shuffle is the chunk equi-join on (int, long) rows — never
     * pairwise pixels, never payload bytes. */

@@ -53,15 +53,6 @@ object SegmentDedup {
           .as("seg")): _*)
   }
 
-  /** Global first-occurrence winner per distinct segment text:
-    * `seg, doc_id, seg_id` of the lexicographically smallest
-    * occurrence. */
-  def firstOccurrences(segs: DataFrame, idCol: String = "doc_id"): DataFrame =
-    segs.groupBy("seg")
-      .agg(min(struct(col(idCol), col("seg_id"))).as("__w"))
-      .select(col("seg"), col("__w")(idCol).as(idCol),
-        col("__w")("seg_id").as("seg_id"))
-
   /** Result of admitting one batch against the segment store:
     * `report` is the per-doc survival report for THIS batch,
     * `segments` the distinct new segment hashes to append. */

@@ -183,12 +183,6 @@ object Expectations {
         Seq(childCol), "left_anti")
       .agg(count(lit(1)).as("orphans"))
 
-  /** V6: source freshness — hours since max(loadedAtCol), compared by the
-    * caller against warn/error bounds (reference dbt/models/schema.yml:10-13). */
-  def freshnessHours(df: DataFrame, loadedAtCol: String): DataFrame =
-    df.agg(((unix_timestamp(current_timestamp()) -
-      unix_timestamp(max(col(loadedAtCol)))) / 3600.0).as("hours_since_load"))
-
   /** dbt-style source-freshness policy: warn past `warnAfterHours`,
     * error past `errorAfterHours` since the newest `loadedAtCol` value
     * (reference `dbt/models/schema.yml:10-13` declares warn 12 h /

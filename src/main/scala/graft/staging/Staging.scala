@@ -24,36 +24,4 @@ object Staging {
       round(col("o_totalprice"), 2).as("order_value"),
       to_date(col("o_orderdate")).as("dt"),
       split_part(col("o_orderpriority"), lit("-"), lit(1)).as("priority_code"))
-
-  /** customer → staging (status-like dim kept as-is, balance rounded). */
-  def stgCustomers(customer: DataFrame): DataFrame =
-    customer.select(
-      col("c_custkey").cast("bigint").as("customer_id"),
-      col("c_name").as("name"),
-      col("c_nationkey").cast("int").as("nation_id"),
-      round(col("c_acctbal"), 2).as("account_balance"),
-      col("c_mktsegment").as("segment"))
-
-  /** events → staging incl. JSON field access on the `props` payload
-    * (F8 — the reference carries web_events.metadata through opaquely;
-    * `get_json_object` is the Spark-native flatten). */
-  def stgEvents(events: DataFrame): DataFrame =
-    events.select(
-      col("event_id").cast("bigint").as("event_id"),
-      col("user_id").cast("bigint").as("user_id"),
-      to_date(col("ts")).as("dt"),
-      col("ts"),
-      col("event_type"),
-      round(col("value"), 2).as("value"),
-      get_json_object(col("props"), "$.k").cast("int").as("prop_k"))
-
-  /** part → staging product dim. */
-  def stgParts(part: DataFrame): DataFrame =
-    part.select(
-      col("p_partkey").cast("bigint").as("part_id"),
-      col("p_name").as("name"),
-      col("p_brand").as("brand"),
-      col("p_type").as("part_type"),
-      col("p_size").cast("int").as("size"),
-      round(col("p_retailprice"), 2).as("price"))
 }

@@ -41,12 +41,9 @@ object Streams {
     * Every stateful operator keeps one state store (and pays one
     * commit) per shuffle partition per micro-batch, so this should
     * track STATE VOLUME, not core count. 4 is right for the ≤600k-row
-    * local verification backlog; a production deployment sizes it via
-    * `graft.stream.statePartitions` on the parent session (e.g. keys ×
-    * executors / target-keys-per-store). NOTE: the partition count is
-    * baked into a stream's checkpoint at first start — change it only
-    * for fresh checkpoints (all queries here use fresh per-run
-    * checkpoints, which is why the conf is safe to honor). */
+    * local verification backlog. NOTE: the partition count is baked
+    * into a stream's checkpoint at first start — change it only for
+    * fresh checkpoints. */
   val StreamShufflePartitions = 4
 
   /** Fork a session for one streaming run: `newSession()` shares the
@@ -55,13 +52,9 @@ object Streams {
     * into — or races with — concurrent batch work on the parent
     * session (mutating the shared conf around `start()` would, under
     * the concurrent-domain orchestration this engine runs). */
-  private[streaming] def streamSession(spark: SparkSession,
-      shufflePartitions: Int = StreamShufflePartitions): SparkSession = {
+  private[streaming] def streamSession(spark: SparkSession): SparkSession = {
     val ss = spark.newSession()
-    val n = spark.conf.getOption("graft.stream.statePartitions")
-      .map(_.trim.toInt).getOrElse(shufflePartitions)
-    require(n >= 1, s"graft.stream.statePartitions must be >= 1, got $n")
-    ss.conf.set("spark.sql.shuffle.partitions", n.toString)
+    ss.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
     ss
   }
 
@@ -132,7 +125,7 @@ object Streams {
     * streaming shuffle-partition setting — isolated from the caller's. */
   def runToTable(spark: SparkSession, outputMode: String)(
       build: SparkSession => DataFrame): DataFrame = {
-    val ss = streamSession(spark, StreamShufflePartitions)
+    val ss = streamSession(spark)
     val sinkName = s"graft_stream_${counter.incrementAndGet()}"
     val q = build(ss).writeStream
       .outputMode(outputMode)
@@ -288,7 +281,7 @@ object Streams {
       targetPath: String, checkpointDir: String,
       glob: String = "events.parquet",
       maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = streamSession(spark, StreamShufflePartitions)
+    val ss = streamSession(spark)
     val stream = eventStream(ss, sourceDir, glob, maxFilesPerTrigger)
       .withColumn("dt", to_date(col("ts")))
     val q = stream.writeStream
@@ -318,7 +311,7 @@ object Streams {
       tablePath: String, checkpointDir: String,
       glob: String = "events.parquet",
       maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = streamSession(spark, StreamShufflePartitions)
+    val ss = streamSession(spark)
     val stream = eventStream(ss, sourceDir, glob, maxFilesPerTrigger)
       .withColumn("dt", to_date(col("ts")))
     val q = stream.writeStream
